@@ -1,6 +1,7 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.CheckpointEntry
 
@@ -203,218 +204,242 @@ object Checkpoint {
     }
   }
 
+  def logPath(outDir: String): String = s"$outDir/checkpoint"
   def sketchesPath(outDir: String): String = s"$outDir/_sketches"
-
-  /** Persist per-partition key sketches (one row per (partition, rule)):
-    * the membership side of the CROSS-RUN uniqueness gate — the
-    * Spark-native stand-in for the reference's global ETag table
-    * (dynamodb.py:22-40). Dynamic overwrite per partition: a re-validated
-    * partition replaces exactly its own sketch (content lineage travels in
-    * snapshot_id, so stale sketches are detectable), and two concurrent
-    * disjoint-scope runs commit disjoint partitions safely. `part_value`
-    * carries the exact partition string — the hive partition column is
-    * only the directory key (partition columns are TYPE-INFERRED on read;
-    * a numeric-looking source name would come back as a long). */
-  def writeSketches(
-      spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, String, String, Array[Byte])]): Unit = {
-    import spark.implicits._
-    if (rows.isEmpty) return
-    graft.sources.TableIO.writePartitioned(
-      rows.toDF("part_value", "snapshot_id", "rule_id", "key_col", "sketch")
-        .withColumn("partition", col("part_value"))
-        .coalesce(1),
-      sketchesPath(outDir), partitionCol = "partition", recluster = false)
-  }
-
-  /** Sketches for one rule, keyed by exact partition value. */
-  def readSketches(
-      spark: SparkSession, outDir: String,
-      ruleId: String): Map[String, (String, Array[Byte])] = {
-    val p = new org.apache.hadoop.fs.Path(sketchesPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    spark.read.parquet(sketchesPath(outDir))
-      .filter(col("rule_id") === ruleId)
-      .select("part_value", "snapshot_id", "sketch")
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getString(1), r.getAs[Array[Byte]]("sketch"))))
-      .toMap
-  }
-
   def statsStatePath(outDir: String): String = s"$outDir/_stats_state"
   def inventoryPath(outDir: String): String = s"$outDir/_inventory"
   def rulesetsPath(outDir: String): String = s"$outDir/_rulesets"
 
+  /** The four side tables share one layout: metadata rows coalesced to one
+    * file per directory, hive-partitioned by `dir`, a copy of the exact
+    * key column `key` (partition columns are TYPE-INFERRED on read — a
+    * numeric-looking source name would come back as a long — so readers
+    * use `key`). Dynamic overwrite per directory: a re-validated partition
+    * (or a replayed ruleset hash) replaces exactly its own rows, and two
+    * concurrent disjoint-scope runs commit disjoint directories safely.
+    * Per-partition rows carry their lineage in snapshot_id, so stale rows
+    * are detectable. */
+  private def writeSide[T <: Product: TypeTag](
+      spark: SparkSession, path: String, key: String, dir: String,
+      rows: Seq[T], cols: String*): Unit = {
+    import spark.implicits._
+    if (rows.nonEmpty)
+      graft.sources.TableIO.writePartitioned(
+        rows.toDF(cols: _*).withColumn(dir, col(key)).coalesce(1),
+        path, partitionCol = dir, recluster = false)
+  }
+
+  private def readSide(
+      spark: SparkSession, path: String, cols: String*): Array[Row] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Array.empty
+    else spark.read.parquet(path).select(cols.map(col): _*).collect()
+  }
+
+  /** Persist per-partition key sketches (one row per (partition, rule)):
+    * the membership side of the CROSS-RUN uniqueness gate — the
+    * Spark-native stand-in for the reference's global ETag table
+    * (dynamodb.py:22-40). */
+  def writeSketches(
+      spark: SparkSession, outDir: String,
+      rows: Seq[(String, String, String, String, Array[Byte])]): Unit =
+    writeSide(spark, sketchesPath(outDir), "part_value", "partition", rows,
+      "part_value", "snapshot_id", "rule_id", "key_col", "sketch")
+
+  /** rule id → partition → (snapshot_id, sketch). */
+  private def sketchesByRule(spark: SparkSession, outDir: String)
+      : Map[String, Map[String, (String, Array[Byte])]] =
+    readSide(spark, sketchesPath(outDir),
+        "rule_id", "part_value", "snapshot_id", "sketch")
+      .groupBy(_.getString(0))
+      .map { case (id, rs) =>
+        id -> rs.map(r => r.getString(1) ->
+          ((r.getString(2), r.getAs[Array[Byte]](3)))).toMap
+      }
+
+  /** Sketches for one rule, keyed by exact partition value. */
+  def readSketches(
+      spark: SparkSession, outDir: String,
+      ruleId: String): Map[String, (String, Array[Byte])] =
+    sketchesByRule(spark, outDir).getOrElse(ruleId, Map.empty)
+
   /** Persist the PER-RULE fingerprint map of one ruleset hash — the
     * lookup table rule-delta revalidation diffs against: a later run whose
-    * ruleset hash differs finds out WHICH rules changed (vs. today's
-    * all-or-nothing hash compare) and re-evaluates only those. One row per
-    * rule; dynamic overwrite of the hash's own partition (idempotent
-    * across replays). `hash_value` carries the exact hash — the hive
-    * partition column is only the directory key (type-inferred on read). */
+    * ruleset hash differs finds out WHICH rules changed and re-evaluates
+    * only those. One row per rule, keyed by the exact hash (`hash_value`). */
   def writeRulesetMap(
       spark: SparkSession, outDir: String, rulesetHash: String,
-      fps: Map[String, String]): Unit = {
-    import spark.implicits._
-    if (fps.isEmpty) return
-    graft.sources.TableIO.writePartitioned(
-      fps.toSeq.toDF("rule_id", "rule_fp")
-        .withColumn("hash_value", lit(rulesetHash))
-        .withColumn("ruleset", lit(rulesetHash))
-        .coalesce(1),
-      rulesetsPath(outDir), partitionCol = "ruleset", recluster = false)
-  }
-
-  /** rule_id → per-rule fingerprint for one persisted ruleset hash; empty
-    * when that hash never ran with map-writing code (pre-feature runs →
-    * rule-delta falls back to a full revalidation). */
-  def readRulesetMap(
-      spark: SparkSession, outDir: String,
-      rulesetHash: String): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(rulesetsPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    spark.read.parquet(rulesetsPath(outDir))
-      .filter(col("hash_value") === rulesetHash)
-      .select("rule_id", "rule_fp")
-      .collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .toMap
-  }
-
-  /** For each partition whose CURRENT snapshot id matches some completed
-    * checkpoint entry (under ANY ruleset hash): the ruleset hash of the
-    * latest such entry — i.e. "this exact data was last fully validated
-    * under THAT rule set". The rule-delta classifier starts here. */
-  def latestRulesetForSnapshots(
-      spark: SparkSession, path: String,
-      partitionSnapshots: Map[String, String]): Map[String, String] = {
-    read(spark, path)
-      .collect()
-      .filter(e => partitionSnapshots.get(e.partition).contains(e.snapshot_id))
-      .groupBy(_.partition)
-      .map { case (p, es) => p -> es.maxBy(_.completed_at).ruleset_hash }
-  }
+      fps: Map[String, String]): Unit =
+    writeSide(spark, rulesetsPath(outDir), "hash_value", "ruleset",
+      fps.toSeq.map { case (id, fp) => (id, fp, rulesetHash) },
+      "rule_id", "rule_fp", "hash_value")
 
   /** Persist each validated partition's mergeable per-source stats state
     * (see [[graft.drift.SourceStatsAggregate.serializeStates]]) — the
     * material an APPEND-DELTA run folds a new-files-only scan into, so
     * stats/drift/RI re-evaluate over the WHOLE partition without
-    * rescanning old files. Dynamic overwrite per partition, lineage in
-    * snapshot_id — the same contract as the key sketches. */
+    * rescanning old files. */
   def writeStatsState(
       spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, Array[Byte])]): Unit = {
-    import spark.implicits._
-    if (rows.isEmpty) return
-    graft.sources.TableIO.writePartitioned(
-      rows.toDF("part_value", "snapshot_id", "state")
-        .withColumn("partition", col("part_value"))
-        .coalesce(1),
-      statsStatePath(outDir), partitionCol = "partition", recluster = false)
-  }
+      rows: Seq[(String, String, Array[Byte])]): Unit =
+    writeSide(spark, statsStatePath(outDir), "part_value", "partition", rows,
+      "part_value", "snapshot_id", "state")
 
   /** partition → (snapshot_id, serialized stats state). */
   def readStatsState(
-      spark: SparkSession, outDir: String): Map[String, (String, Array[Byte])] = {
-    val p = new org.apache.hadoop.fs.Path(statsStatePath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    spark.read.parquet(statsStatePath(outDir))
-      .select("part_value", "snapshot_id", "state")
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getString(1), r.getAs[Array[Byte]]("state"))))
+      spark: SparkSession, outDir: String): Map[String, (String, Array[Byte])] =
+    readSide(spark, statsStatePath(outDir), "part_value", "snapshot_id", "state")
+      .map(r => r.getString(0) -> ((r.getString(1), r.getAs[Array[Byte]](2))))
       .toMap
-  }
 
   /** Persist each validated partition's `path:length` file inventory —
     * the list a later append-delta run subtracts from the current listing
-    * to find exactly the NEW files. One row per file; dynamic overwrite
-    * per partition, lineage in snapshot_id (which is itself the md5 of
-    * this sorted list, so inventory and checkpoint cannot desync
-    * silently). */
+    * to find exactly the NEW files. One row per file; snapshot_id is
+    * itself the md5 of this sorted list, so inventory and checkpoint
+    * cannot desync silently. */
   def writeInventory(
       spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, String)]): Unit = {
-    import spark.implicits._
-    if (rows.isEmpty) return
-    graft.sources.TableIO.writePartitioned(
-      rows.toDF("part_value", "snapshot_id", "file")
-        .withColumn("partition", col("part_value"))
-        .coalesce(1), // metadata volume: one row per data file
-      inventoryPath(outDir), partitionCol = "partition", recluster = false)
-  }
-
-  /** partition → (snapshot_id, file entries). */
-  def readInventory(
-      spark: SparkSession, outDir: String): Map[String, (String, Seq[String])] = {
-    val p = new org.apache.hadoop.fs.Path(inventoryPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    spark.read.parquet(inventoryPath(outDir))
-      .select("part_value", "snapshot_id", "file")
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (part, rs) =>
-        part -> ((rs.head.getString(1), rs.map(_.getString(2)).toSeq))
-      }
-  }
-
-  /** Latest checkpointed snapshot id per partition under `rulesetHash` —
-    * the "what did the last completed run see" map append-delta
-    * classification starts from. */
-  def latestSnapshotByPartition(
-      spark: SparkSession,
-      path: String,
-      rulesetHash: String): Map[String, String] = {
-    read(spark, path)
-      .filter(col("ruleset_hash") === rulesetHash)
-      .collect()
-      .groupBy(_.partition)
-      .map { case (part, es) =>
-        part -> es.maxBy(_.completed_at).snapshot_id
-      }
-  }
+      rows: Seq[(String, String, String)]): Unit =
+    writeSide(spark, inventoryPath(outDir), "part_value", "partition", rows,
+      "part_value", "snapshot_id", "file")
 
   /** Partitions already validated for (snapshotId, rulesetHash) — the skip
-    * set for a resumed run. Latest entry wins per partition. */
+    * set for a resumed run over a table-granular snapshot id. */
   def completedPartitions(
       spark: SparkSession,
       path: String,
       snapshotId: String,
-      rulesetHash: String): Set[String] = {
-    val cp = read(spark, path)
-    cp.filter(
-        col("snapshot_id") === snapshotId &&
-          col("ruleset_hash") === rulesetHash)
-      .select("partition")
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-      .toSet
+      rulesetHash: String): Set[String] =
+    completedUnder(read(spark, path).collect().toSeq, rulesetHash,
+      _ => Some(snapshotId))
+
+  /** Partitions with an entry under `rulesetHash` whose snapshot id is the
+    * partition's current one (None = the partition has no current id). */
+  private def completedUnder(
+      entries: Seq[CheckpointEntry], rulesetHash: String,
+      current: String => Option[String]): Set[String] =
+    entries.filter(e => e.ruleset_hash == rulesetHash &&
+        current(e.partition).contains(e.snapshot_id))
+      .map(_.partition).toSet
+
+  /** Everything an eligible append-delta partition carries into the run:
+    * its last validated snapshot id and file inventory, the files added
+    * since, and the stats state and per-rule key sketches persisted under
+    * that old snapshot id. */
+  final case class DeltaPart(
+      oldSnapshotId: String,
+      oldFiles: Seq[String],
+      newFiles: Seq[String],
+      oldState: Array[Byte],
+      oldSketches: Map[String, Array[Byte]])
+
+  /** One output dir's per-partition lineage, as a run sees it at start:
+    * the checkpoint entries (metadata, |runs × partitions| small rows,
+    * collected once) and the side tables, each read at most once and only
+    * when a question needs it. Every answer is a pure function of those.
+    * The run's own writes come after every question it asks, so what it
+    * read stays the lineage it decided on. */
+  final class Lineage private (
+      spark: SparkSession, outDir: String, entries: Seq[CheckpointEntry]) {
+
+    private lazy val inventory: Map[String, (String, Seq[String])] =
+      readSide(spark, inventoryPath(outDir), "part_value", "snapshot_id", "file")
+        .groupBy(_.getString(0))
+        .map { case (part, rs) =>
+          part -> ((rs.head.getString(1), rs.map(_.getString(2)).toSeq))
+        }
+    private lazy val states = readStatsState(spark, outDir)
+    private lazy val sketches = sketchesByRule(spark, outDir)
+    private lazy val rulesets: Map[String, Map[String, String]] =
+      readSide(spark, rulesetsPath(outDir), "hash_value", "rule_id", "rule_fp")
+        .groupBy(_.getString(0))
+        .map { case (h, rs) =>
+          h -> rs.map(r => r.getString(1) -> r.getString(2)).toMap
+        }
+
+    /** Latest entry (by completed_at) per partition among those kept. */
+    private def latest(
+        keep: CheckpointEntry => Boolean): Map[String, CheckpointEntry] =
+      entries.filter(keep).groupBy(_.partition)
+        .map { case (part, es) => part -> es.maxBy(_.completed_at) }
+
+    /** The skip set: partitions already validated under `rulesetHash` for
+      * their current content. With per-partition snapshot ids a partition
+      * is done iff some entry carries its OWN current id — a new or
+      * re-uploaded partition re-validates exactly itself; without them
+      * (non-hive layouts) the whole-table `snapshotId` decides. */
+    def completed(
+        rulesetHash: String, partSnaps: Map[String, String],
+        snapshotId: String): Set[String] =
+      completedUnder(entries, rulesetHash,
+        if (partSnaps.nonEmpty) partSnaps.get else _ => Some(snapshotId))
+
+    /** Append-delta eligibility: a `todo` partition qualifies iff its last
+      * completed run under `rulesetHash` left an inventory, a stats state
+      * and a sketch per cross-run rule, all under that run's snapshot id,
+      * and its current file set strictly extends the old one (same paths,
+      * same lengths). Every other partition falls back to a full rescan. */
+    def deltaParts(
+        todo: Seq[String], rulesetHash: String,
+        filesByPart: Map[String, Seq[String]],
+        crossRunIds: Seq[String]): Map[String, DeltaPart] = {
+      val last = latest(_.ruleset_hash == rulesetHash)
+      todo.flatMap { part =>
+        for {
+          files <- filesByPart.get(part)
+          oldSnap <- last.get(part).map(_.snapshot_id)
+          (invSnap, oldFiles) <- inventory.get(part)
+          if invSnap == oldSnap
+          (stSnap, oldState) <- states.get(part)
+          if stSnap == oldSnap
+          oldSketches = crossRunIds.flatMap(id =>
+            sketches.get(id).flatMap(_.get(part))
+              .filter(_._1 == oldSnap).map(id -> _._2)).toMap
+          if oldSketches.size == crossRunIds.size
+          oldSet = oldFiles.toSet
+          if oldSet.subsetOf(files.toSet) && files.size > oldFiles.size
+        } yield part -> DeltaPart(oldSnap, oldFiles,
+          files.filterNot(oldSet).sorted, oldState, oldSketches)
+      }.toMap
+    }
+
+    /** Rule-delta: the rules whose fingerprint differs from the one the
+      * partition's unchanged data was last validated under (latest entry
+      * carrying its current snapshot id, any ruleset hash), unioned over
+      * `todo`. All-or-nothing: if any partition has no such entry, or its
+      * ruleset hash has no persisted map, every rule is returned. */
+    def changedRules(
+        todo: Seq[String], partSnaps: Map[String, String],
+        ruleFps: Map[String, String]): Set[String] = {
+      val last = latest(e => partSnaps.get(e.partition).contains(e.snapshot_id))
+      val perPart = todo.map(p =>
+        for {
+          e <- last.get(p)
+          old <- rulesets.get(e.ruleset_hash)
+        } yield ruleFps.keySet.filter(id => !old.get(id).contains(ruleFps(id))))
+      if (perPart.contains(None)) ruleFps.keySet
+      else perPart.flatten.flatten.toSet
+    }
+
+    /** Cross-run history coverage: the `ruleId` sketch of every
+      * (partition, snapshot id) in `history`, in order — or None when any
+      * partition has no sketch under that snapshot id (the check cannot
+      * complete). */
+    def historySketches(
+        ruleId: String,
+        history: Seq[(String, String)]): Option[Seq[Array[Byte]]] = {
+      val byPart = sketches.getOrElse(ruleId, Map.empty)
+      val found = history.flatMap { case (part, snap) =>
+        byPart.get(part).filter(_._1 == snap).map(_._2)
+      }
+      if (found.size == history.size) Some(found) else None
+    }
   }
 
-  /** PER-PARTITION-lineage skip set: a partition is done iff some
-    * checkpoint entry under `rulesetHash` carries that partition's OWN
-    * current snapshot id (BASELINE's "per-partition lineage" taken
-    * literally — a new or re-uploaded partition re-validates exactly
-    * itself; every untouched partition keeps its checkpoint). */
-  def completedPartitionsBySnapshot(
-      spark: SparkSession,
-      path: String,
-      rulesetHash: String,
-      partitionSnapshots: Map[String, String]): Set[String] = {
-    val cp = read(spark, path)
-    cp.filter(col("ruleset_hash") === rulesetHash)
-      .select("partition", "snapshot_id")
-      .distinct()
-      .collect()
-      .filter(r => partitionSnapshots.get(r.getString(0))
-        .contains(r.getString(1)))
-      .map(_.getString(0))
-      .toSet
+  object Lineage {
+    /** One collect of `checkpoint/`; side tables stay unread. */
+    def load(spark: SparkSession, outDir: String): Lineage =
+      new Lineage(spark, outDir, read(spark, logPath(outDir)).collect().toSeq)
   }
 }

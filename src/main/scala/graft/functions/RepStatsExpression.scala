@@ -1,5 +1,6 @@
 package graft.functions
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -20,12 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-evaluated the split up to 12x per row and ran a slice+concat
   * lambda per n-gram position, three times over. */
 object RepStatsUtil {
-  private val Stop: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    Seq("the", "a", "an", "of", "to", "in", "and", "is", "it", "that")
-      .foreach(s.add)
-    s
-  }
+  private val Stop: java.util.HashSet[String] =
+    new java.util.HashSet[String](TextFunctions.enStopwords.asJava)
 
   def stats(s: UTF8String): GenericInternalRow = {
     val words = s.toString.split(" ", -1)

@@ -59,18 +59,6 @@ object QuarantineJob {
       case r: CrossRunUniqueRule => r.id
     }.toSet
 
-  private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-  }
-
   def run(
       spark: SparkSession,
       inputPath: String,
@@ -82,7 +70,7 @@ object QuarantineJob {
     import spark.implicits._
 
     val verdictsPath = ValidationJob.verdictsPath(validationOutDir)
-    require(hasDataFiles(spark, verdictsPath),
+    require(TableIO.hasDataFiles(spark, verdictsPath),
       s"no verdicts under $validationOutDir — run validate first")
     val verdicts = spark.read.parquet(verdictsPath)
       .select("source", "rule_id", "status").collect()
@@ -104,7 +92,7 @@ object QuarantineJob {
     // the splittable sources, keyed (source, doc_id) with the naming rules
     // as evidence — SMALL by construction, broadcast into both joins
     val vioPath = ValidationJob.violationsPath(validationOutDir)
-    require(hasDataFiles(spark, vioPath),
+    require(TableIO.hasDataFiles(spark, vioPath),
       s"FAIL verdicts but no violations table under $validationOutDir")
     val vio = spark.read.parquet(vioPath)
       .filter(col("source").isin(srcs.map(x => x: Any): _*) &&

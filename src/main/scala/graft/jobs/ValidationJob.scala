@@ -1,5 +1,6 @@
 package graft.jobs
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
@@ -82,16 +83,7 @@ object ValidationJob {
         * would need one scan per subset, which is the full rescan it was
         * avoiding. Incompatible with appendDelta (changed data vs
         * changed rules — a partition is one or the other). */
-      ruleDelta: Boolean = false,
-      /** Cache the fact table across the rule-family passes. OFF by
-        * default since the r03 fusion: the only repeat reads of the fact
-        * table are two NARROW column scans (uniqueness passes — doc_id
-        * (+source)), so caching full rows (tokens included) trades a
-        * ~25x-larger memory/disk footprint for avoiding ~4% of the bytes —
-        * a pessimization at any scale (measured: the 64M-row CLI run
-        * stalled caching 30 GB; uncached it validates in 42 s). Turn on
-        * only for small inputs queried repeatedly in one session. */
-      cache: Boolean = false)
+      ruleDelta: Boolean = false)
 
   final case class RunReport(
       snapshotId: String,
@@ -111,16 +103,9 @@ object ValidationJob {
         * rule-delta; the full set otherwise). */
       rulesEvaluated: Seq[String] = Nil)
 
-  /** Everything an eligible append-delta partition carries into the run. */
-  private final case class DeltaPart(
-      oldSnapshotId: String,
-      oldFiles: Seq[String],
-      newFiles: Seq[String],
-      oldState: Array[Byte])
-
   def violationsPath(outDir: String) = s"$outDir/violations"
   def verdictsPath(outDir: String) = s"$outDir/verdicts"
-  def checkpointPath(outDir: String) = s"$outDir/checkpoint"
+  def checkpointPath(outDir: String) = Checkpoint.logPath(outDir)
   def runLogPath(outDir: String) = s"$outDir/run_log"
   def violationsLogPath(outDir: String) = s"$outDir/violations_log"
 
@@ -197,34 +182,24 @@ object ValidationJob {
     // silently NULLs missing columns and prunes extras, so a renamed or
     // retyped column would otherwise surface as a wall of row violations
     // instead of "the table's shape changed". One footer read each.
-    graft.operators.SchemaCheck.requireCompatible(
-      graft.operators.SchemaCheck.parquetSchema(spark, cfg.inputPath),
-      Encoders.product[Sequence].schema, s"input table ${cfg.inputPath}")
-    val all = spark.read.schema(Encoders.product[Sequence].schema)
-      .parquet(cfg.inputPath).as[Sequence]
-    graft.operators.SchemaCheck.requireCompatible(
-      graft.operators.SchemaCheck.parquetSchema(spark, cfg.manifestPath),
-      Encoders.product[ManifestEntry].schema,
-      s"manifest table ${cfg.manifestPath}")
-    val manifest = spark.read.schema(Encoders.product[ManifestEntry].schema)
-      .parquet(cfg.manifestPath).as[ManifestEntry]
-    val baseline = cfg.baselinePath.map { p =>
+    def gatedRead[T <: Product: TypeTag](what: String, p: String) = {
+      val schema = Encoders.product[T].schema
       graft.operators.SchemaCheck.requireCompatible(
-        graft.operators.SchemaCheck.parquetSchema(spark, p),
-        Encoders.product[BaselineBin].schema, s"baseline table $p")
-      spark.read.schema(Encoders.product[BaselineBin].schema)
-        .parquet(p).as[BaselineBin]
+        graft.operators.SchemaCheck.parquetSchema(spark, p), schema, s"$what $p")
+      spark.read.schema(schema).parquet(p).as[T]
     }
+    val all = gatedRead[Sequence]("input table", cfg.inputPath)
+    val manifest = gatedRead[ManifestEntry]("manifest table", cfg.manifestPath)
+    val baseline =
+      cfg.baselinePath.map(gatedRead[BaselineBin]("baseline table", _))
 
     // Resume: drop partitions already validated under this exact
     // (snapshot, rule set) lineage. The filter is on the partition column,
-    // so Catalyst prunes their files from the scan entirely.
-    val done =
-      if (partSnaps.nonEmpty)
-        Checkpoint.completedPartitionsBySnapshot(
-          spark, checkpointPath(cfg.outDir), rulesetHash, partSnaps)
-      else Checkpoint.completedPartitions(
-        spark, checkpointPath(cfg.outDir), snapshotId, rulesetHash)
+    // so Catalyst prunes their files from the scan entirely. The lineage
+    // is read once here and answers every later skip / delta / history
+    // question of the run.
+    val lineage = Checkpoint.Lineage.load(spark, cfg.outDir)
+    val done = lineage.completed(rulesetHash, partSnaps, snapshotId)
     val allParts = TableIO.partitionValues(spark, cfg.inputPath, "source")
       .getOrElse(
         all.select("source").distinct().as[String].collect().toSeq.sorted)
@@ -240,39 +215,21 @@ object ValidationJob {
         (System.nanoTime() - t0) / 1000000)
     }
 
-    // RULE-DELTA classification: every to-validate partition must carry
-    // its current snapshot under some completed prior run whose persisted
-    // per-rule map exists — then the changed set is the union over
-    // partitions (re-running an unchanged rule for one partition is
-    // harmless; one engine pass beats one per distinct subset). A strict
-    // subset is required twice over: changed == all rules means delta buys
-    // nothing, and changed == ∅ (a config-input edit touching no rule that
-    // exists, e.g. baseline swap with no drift rules) still needs the new
-    // lineage hash stamped, which the full path does trivially.
+    // RULE-DELTA classification (Lineage.changedRules): one engine pass
+    // over the union of changed rules beats one per distinct subset. A
+    // strict subset is required twice over: changed == all rules means
+    // delta buys nothing, and changed == ∅ (a config-input edit touching
+    // no rule that exists, e.g. baseline swap with no drift rules) still
+    // needs the new lineage hash stamped, which the full path does
+    // trivially.
     require(!(cfg.ruleDelta && cfg.appendDelta),
       "ruleDelta and appendDelta are mutually exclusive: a partition " +
         "re-validates for changed DATA or changed RULES, never both ways")
     val allIds = cfg.rules.ruleIds.toSet
     val ruleDeltaChanged: Set[String] =
-      if (!cfg.ruleDelta || partSnaps.isEmpty) allIds
-      else {
-        val lastHash = Checkpoint.latestRulesetForSnapshots(
-          spark, checkpointPath(cfg.outDir), partSnaps)
-        val maps = lastHash.values.toSet.iterator
-          .map((h: String) =>
-            h -> Checkpoint.readRulesetMap(spark, cfg.outDir, h))
-          .toMap
-        val perPart: Seq[Option[Set[String]]] = todo.map { p =>
-          for {
-            h <- lastHash.get(p)
-            old = maps(h)
-            if old.nonEmpty
-          } yield allIds.filter(id => !old.get(id).contains(ruleFps(id)))
-        }
-        if (perPart.exists(_.isEmpty)) allIds // some partition ineligible
-        else perPart.flatten.flatten.toSet
-      }
-    val ruleDeltaActive = cfg.ruleDelta &&
+      if (cfg.ruleDelta) lineage.changedRules(todo, partSnaps, ruleFps)
+      else allIds
+    val ruleDeltaActive =
       ruleDeltaChanged.nonEmpty && ruleDeltaChanged != allIds
     val evalRules =
       if (ruleDeltaActive)
@@ -298,43 +255,17 @@ object ValidationJob {
         "_locks/ reclaim automatically)")
     try {
 
-    // APPEND-DELTA classification: a todo partition is delta-eligible iff
-    // its last completed run (same ruleset) left behind a matching
-    // inventory, stats state, and cross-run sketch, and the current file
-    // set strictly extends the old one (same paths, same lengths). Every
-    // condition is checked against the OLD snapshot id, which is itself
-    // the md5 of the old inventory — the artifacts cannot desync silently.
-    val sketchesByRule: Map[String, Map[String, (String, Array[Byte])]] =
-      if (cfg.appendDelta)
-        cfg.rules.crossRunRules.map(r =>
-          r.id -> Checkpoint.readSketches(spark, cfg.outDir, r.id)).toMap
-      else Map.empty
-    val deltaInfo: Map[String, DeltaPart] =
+    // APPEND-DELTA classification (Lineage.deltaParts): old↔new
+    // duplicates only surface through the cross-run sketches, so a rule
+    // set without a cross-run rule never runs as delta.
+    val deltaInfo: Map[String, Checkpoint.DeltaPart] =
       if (!cfg.appendDelta || cfg.rules.crossRunRules.isEmpty) Map.empty
       else {
         require(cfg.refSnapshotPath.isEmpty,
           "appendDelta cannot run with a reference snapshot: the " +
             "cross-snapshot equality join needs both sides complete")
-        val inv = Checkpoint.readInventory(spark, cfg.outDir)
-        val states = Checkpoint.readStatsState(spark, cfg.outDir)
-        val lastSnap = Checkpoint.latestSnapshotByPartition(
-          spark, checkpointPath(cfg.outDir), rulesetHash)
-        todo.flatMap { part =>
-          for {
-            files <- filesByPart.flatMap(_.get(part))
-            oldSnap <- lastSnap.get(part)
-            (invSnap, oldFiles) <- inv.get(part)
-            if invSnap == oldSnap
-            (stSnap, oldState) <- states.get(part)
-            if stSnap == oldSnap
-            if cfg.rules.crossRunRules.forall(r =>
-              sketchesByRule(r.id).get(part).exists(_._1 == oldSnap))
-            oldSet = oldFiles.toSet
-            if oldSet.subsetOf(files.toSet) && files.size > oldFiles.size
-          } yield part -> DeltaPart(
-            oldSnap, oldFiles,
-            files.filterNot(oldSet).sorted, oldState)
-        }.toMap
+        lineage.deltaParts(todo, rulesetHash, filesByPart.getOrElse(Map.empty),
+          cfg.rules.crossRunRules.map(_.id))
       }
     val deltaParts = deltaInfo.keySet
     val fullTodo = todo.filterNot(deltaParts)
@@ -361,7 +292,7 @@ object ValidationJob {
         .parquet(entries.map(TableIO.inventoryEntryPath): _*)
         .as[Sequence]
 
-    val seqs0 =
+    val seqs =
       if (deltaParts.isEmpty) {
         if (done.isEmpty && requested.isEmpty) all
         else all.filter(col("source").isin(todo.map(x => x: Any): _*))
@@ -373,23 +304,8 @@ object ValidationJob {
           .unionByName(deltaSeqs)
       }
 
-    // The three rule-family passes rescan the fact table: cached columnar
-    // when cfg.cache (inputs that fit memory), direct parquet re-scans
-    // otherwise (the 100 TB shape; GRAFT_NO_CACHE=1 also forces it).
-    val useCache = cfg.cache && !sys.env.get("GRAFT_NO_CACHE").contains("1")
-    val seqs =
-      if (useCache)
-        seqs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else seqs0
-    phase("cache_setup")
-
-    val refSnapshot = cfg.refSnapshotPath.map { p =>
-      graft.operators.SchemaCheck.requireCompatible(
-        graft.operators.SchemaCheck.parquetSchema(spark, p),
-        Encoders.product[Sequence].schema, s"reference snapshot $p")
-      spark.read.schema(Encoders.product[Sequence].schema)
-        .parquet(p).as[Sequence]
-    }
+    val refSnapshot =
+      cfg.refSnapshotPath.map(gatedRead[Sequence]("reference snapshot", _))
     // FUSED evaluation (VERDICT r02 #1): the tokens array — ~96% of the
     // table's bytes — is decoded exactly once. The row-rule scan carries
     // the per-source token stats via observe(); the narrow aggregation
@@ -517,26 +433,19 @@ object ValidationJob {
     // sketches (lineage = the OLD snapshot id, verified at classification)
     // route delta keys, and the confirm scan reads exactly their OLD
     // files — new↔old duplicates inside a growing partition surface here.
-    val histSorted = (done.toSeq ++ deltaParts).sorted
-    def histSnapOf(src: String): String =
-      deltaInfo.get(src).map(_.oldSnapshotId).getOrElse(snapOf(src))
+    val history = (done.toSeq ++ deltaParts).sorted.map(s =>
+      s -> deltaInfo.get(s).fold(snapOf(s))(_.oldSnapshotId))
     var xrunNotCompleted = Set.empty[(String, String)]
     val xrunCaches =
       scala.collection.mutable.ListBuffer.empty[Dataset[_]]
     val xrunVioFrames = crossRules.flatMap { rule =>
-      if (histSorted.isEmpty) None
-      else {
-        val sketches =
-          if (cfg.appendDelta) sketchesByRule(rule.id)
-          else Checkpoint.readSketches(spark, cfg.outDir, rule.id)
-        val covered = histSorted.filter(s =>
-          sketches.get(s).exists(_._1 == histSnapOf(s)))
-        if (covered.size < histSorted.size) {
+      if (history.isEmpty) None
+      else lineage.historySketches(rule.id, history) match {
+        case None =>
           xrunNotCompleted ++= todo.map(s => (s, rule.id))
           None
-        } else {
-          val merged = covered.map(s => sketches(s)._2)
-            .reduce(graft.operators.BloomDedup.merge)
+        case Some(sketches) =>
+          val merged = sketches.reduce(graft.operators.BloomDedup.merge)
           val cands = seqs
             .select(col("source"), col(rule.key).cast("string").as("xk"))
             .filter(col("xk").isNotNull &&
@@ -547,8 +456,8 @@ object ValidationJob {
           // incremental case), history is never scanned
           if (cands.count() == 0) None
           else {
-            val coveredDone = covered.filterNot(deltaParts)
-            val coveredDelta = covered.filter(deltaParts)
+            val (coveredDelta, coveredDone) =
+              history.map(_._1).partition(deltaParts)
             val doneKeys =
               if (coveredDone.isEmpty) None
               else Some(all
@@ -579,7 +488,6 @@ object ValidationJob {
                 col("source"),
                 lit(rule.severity).as("severity")))
           }
-        }
       }
     }
     phase("cross_run_unique")
@@ -631,30 +539,19 @@ object ValidationJob {
             evalRules.crossRunRules.map(_.id))
       else (Nil, Nil)
     val preservedVio: Option[DataFrame] =
-      if (preserveSources.isEmpty || preserveIds.isEmpty) None
+      // a prior run with ZERO violations leaves the table dir present but
+      // file-less; schema inference on an empty parquet dir aborts the read
+      if (preserveSources.isEmpty || preserveIds.isEmpty ||
+          !TableIO.hasDataFiles(spark, violationsPath(cfg.outDir))) None
       else {
-        val vp = new org.apache.hadoop.fs.Path(violationsPath(cfg.outDir))
-        val fs = vp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a prior run with ZERO violations leaves the table dir present but
-        // file-less; schema inference on an empty parquet dir aborts the read
-        def hasDataFiles: Boolean = {
-          val it = fs.listFiles(vp, true)
-          var found = false
-          while (!found && it.hasNext)
-            found = it.next().getPath.getName.endsWith(".parquet")
-          found
-        }
-        if (!fs.exists(vp) || !hasDataFiles) None
-        else {
-          val p = spark.read.parquet(violationsPath(cfg.outDir))
-            .filter(col("source").isin(preserveSources.map(x => x: Any): _*)
-              && col("rule_id").isin(preserveIds.map(x => x: Any): _*))
-            .select("doc_id", "rule_id", "observed", "source", "severity")
-            .repartition(nPart, col("source"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          xrunCaches += p
-          Some(p)
-        }
+        val p = spark.read.parquet(violationsPath(cfg.outDir))
+          .filter(col("source").isin(preserveSources.map(x => x: Any): _*)
+            && col("rule_id").isin(preserveIds.map(x => x: Any): _*))
+          .select("doc_id", "rule_id", "observed", "source", "severity")
+          .repartition(nPart, col("source"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        xrunCaches += p
+        Some(p)
       }
     val preservedCount = preservedVio.map(_.count()).getOrElse(0L)
     val vio = Seq(
@@ -675,11 +572,8 @@ object ValidationJob {
     // concurrent disjoint-scope runs write DISTINCT run_id generations of
     // the violations/run logs (and distinct checkpoint segments) while a
     // crash replay of either still overwrites exactly its own generation.
-    val scopeSuffix = requested.fold("") { ps =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      "-" + md.digest(ps.toSeq.sorted.mkString(",").getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(8)
-    }
+    val scopeSuffix =
+      requested.fold("")(ps => "-" + md5(ps.toSeq.sorted.mkString(",")).take(8))
     val runId =
       s"${snapshotId.take(12)}-${rulesetHash.take(12)}$scopeSuffix"
 
@@ -690,10 +584,8 @@ object ValidationJob {
     val carriedVerdicts: Seq[Verdict] =
       if (!ruleDeltaActive || carriedIds.isEmpty) Nil
       else {
-        val vp = new org.apache.hadoop.fs.Path(verdictsPath(cfg.outDir))
-        val fs = vp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val prior: Map[(String, String), Verdict] =
-          if (!fs.exists(vp)) Map.empty
+          if (!TableIO.hasDataFiles(spark, verdictsPath(cfg.outDir))) Map.empty
           else spark.read.parquet(verdictsPath(cfg.outDir))
             .filter(col("source").isin(runSources.map(x => x: Any): _*) &&
               col("rule_id").isin(carriedIds.toSeq.map(x => x: Any): _*))
@@ -765,14 +657,10 @@ object ValidationJob {
       // is unchanged, so they still hold — metrics included). A carried
       // (source, rule) pair with no prior row (a source new to the
       // manifest) rolls up NOT_COMPLETED, never a silent PASS.
-      val rows = {
-        val fresh = RuleEngine.rollUpVerdicts(
-            spark, runSources, evalRules, vio, fin.stats,
-            fin.notCompleted ++ xrunNotCompleted ++ storageNotCompleted)
-          .collect().toSeq
-        if (!ruleDeltaActive) fresh
-        else fresh ++ carriedVerdicts
-      }
+      val rows = RuleEngine.rollUpVerdicts(
+          spark, runSources, evalRules, vio, fin.stats,
+          fin.notCompleted ++ xrunNotCompleted ++ storageNotCompleted)
+        .collect().toSeq ++ carriedVerdicts
       TableIO.writePartitioned(
         spark.createDataset(rows).coalesce(1).toDF(),
         verdictsPath(cfg.outDir), recluster = false)
@@ -808,11 +696,9 @@ object ValidationJob {
         // keys — Bloom sketches OR together, so fold the old sketch in
         // (and carry it alone if the delta files held no non-null keys:
         // the snapshot id still advanced)
-        val oldOf = (s: String) =>
-          if (deltaInfo.contains(s)) Some(sketchesByRule(rule.id)(s)._2)
-          else None
         (fresh.keySet ++ deltaParts).toSeq.sorted.map { s =>
-          val sk = (fresh.get(s), oldOf(s)) match {
+          val old = deltaInfo.get(s).map(_.oldSketches(rule.id))
+          val sk = (fresh.get(s), old) match {
             case (Some(f), Some(o)) => graft.operators.BloomDedup.merge(o, f)
             case (Some(f), None) => f
             case (None, Some(o)) => o
@@ -852,14 +738,10 @@ object ValidationJob {
     // the in-flight write after its stale partitions were already deleted
     // (and swallow its error). All outcomes are observed; the violations
     // chain's error wins (table integrity first).
-    val vioOutcome = scala.util.Try(Await.result(vioChain, Duration.Inf))
-    val verdictOutcome = scala.util.Try(Await.result(verdictChain, Duration.Inf))
-    val sketchOutcome = scala.util.Try(Await.result(sketchChain, Duration.Inf))
-    val stateOutcome = scala.util.Try(Await.result(stateChain, Duration.Inf))
-    vioOutcome.get
-    val verdictRows = verdictOutcome.get
-    sketchOutcome.get
-    stateOutcome.get
+    Seq(vioChain, verdictChain, sketchChain, stateChain)
+      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      .foreach(_.get)
+    val verdictRows = Await.result(verdictChain, Duration.Inf)
     phase("write_violations+verdicts")
 
     val wallMs = (System.nanoTime() - t0) / 1000000
@@ -870,16 +752,8 @@ object ValidationJob {
       .filter(v => todoSet(v.source))
       .groupBy(_.source).toSeq
       .map { case (src, vs) =>
-        val lvl = vs.map(_.status match {
-          case Status.Fail => 2
-          case Status.PassWithWarnings => 1
-          case _ => 0
-        }).max
-        val verdict = lvl match {
-          case 2 => Status.Fail
-          case 1 => Status.PassWithWarnings
-          case _ => Status.Pass
-        }
+        val verdict = Seq(Status.Fail, Status.PassWithWarnings)
+          .find(st => vs.exists(_.status == st)).getOrElse(Status.Pass)
         CheckpointEntry(
           partition = src,
           // the partition's OWN snapshot id: resume and the transfer
@@ -897,7 +771,6 @@ object ValidationJob {
 
     scanVio.unpersist(blocking = false)
     xrunCaches.foreach(_.unpersist(blocking = false))
-    if (useCache) seqs.unpersist(blocking = false)
     RunReport(snapshotId, rulesetHash, todo,
       done.toSeq.filter(inScope).sorted,
       rowsValidated, vioCount, wallMs,

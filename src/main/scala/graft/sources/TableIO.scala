@@ -136,6 +136,21 @@ object TableIO {
       .foreach(st => fs.delete(st.getPath, true))
   }
 
+  /** True iff `path` holds at least one parquet data file: a table whose
+    * every write was empty is a directory without any, and schema
+    * inference on it aborts the read. */
+  def hasDataFiles(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && {
+      val it = fs.listFiles(p, true)
+      var found = false
+      while (!found && it.hasNext)
+        found = it.next().getPath.getName.endsWith(".parquet")
+      found
+    }
+  }
+
   /** Partition values of a hive-layout table from DIRECTORY NAMES — a
     * metadata read (the Iceberg-manifest analog), replacing a full-table
     * DISTINCT scan. Returns None when the table isn't partitioned by

@@ -516,6 +516,31 @@ object StreamingValidation {
     }
   }
 
+  /** Restart rebuild of a monitor's cumulative state: feeds `merge` the
+    * base generation, then every generation STRICTLY below `batchId` (a
+    * replayed batch must not count itself), and books the rebuild and the
+    * rows it read in `stats`. */
+  private def replayState(
+      s: SparkSession, outDir: String, ns: String, batchId: Long,
+      stats: Option[DriftMonitorStats])(
+      merge: (String, Int, Long) => Unit): Unit = {
+    val (baseHw, baseRows) = readBase(s, outDir, ns)
+    val statePath = driftStatePath(outDir, ns)
+    val older =
+      if (pathExists(s, statePath))
+        s.read.parquet(statePath)
+          .filter(col("batch_id") > baseHw && col("batch_id") < batchId)
+          .select("source", "bin", "count")
+          .collect()
+          .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+      else Nil
+    (baseRows ++ older).foreach(merge.tupled)
+    stats.foreach { st =>
+      st.rebuilds.incrementAndGet()
+      st.stateRowsRead.addAndGet(baseRows.size + older.size)
+    }
+  }
+
   /** Fold every persisted drift_state generation in (base hw, belowBatchId)
     * into a new base generation, then drop the superseded files. Safe to
     * call from inside foreachBatch(belowBatchId): micro-batches commit
@@ -624,24 +649,7 @@ object StreamingValidation {
           driftStatePath(outDir, "drift_"), partitionCol = "batch_id",
           recluster = false)
         if (!initialized) {
-          // restart rebuild: base generation + every generation STRICTLY
-          // below this batch (a replayed batch must not count itself)
-          val (baseHw, baseRows) = readBase(s, outDir, "drift_")
-          baseRows.foreach { case (src, bin, n) => mergeInto(src, bin, n) }
-          val older =
-            if (pathExists(s, driftStatePath(outDir, "drift_")))
-              s.read.parquet(driftStatePath(outDir, "drift_"))
-                .filter(col("batch_id") > baseHw &&
-                  col("batch_id") < batchId)
-                .select("source", "bin", "count")
-                .collect()
-                .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-            else Nil
-          older.foreach { case (src, bin, n) => mergeInto(src, bin, n) }
-          stats.foreach { st =>
-            st.rebuilds.incrementAndGet()
-            st.stateRowsRead.addAndGet(baseRows.size + older.size)
-          }
+          replayState(s, outDir, "drift_", batchId, stats)(mergeInto)
           initialized = true
         }
         batchHist.foreach { case (src, bin, n) => mergeInto(src, bin, n) }
@@ -763,22 +771,7 @@ object StreamingValidation {
           driftStatePath(outDir, "emb_drift_"), partitionCol = "batch_id",
           recluster = false)
         if (!initialized) {
-          val (baseHw, baseRows) = readBase(s, outDir, "emb_drift_")
-          baseRows.foreach { case (l, d, q) => mergeInto(l, d, q) }
-          val older =
-            if (pathExists(s, driftStatePath(outDir, "emb_drift_")))
-              s.read.parquet(driftStatePath(outDir, "emb_drift_"))
-                .filter(col("batch_id") > baseHw &&
-                  col("batch_id") < batchId)
-                .select("source", "bin", "count")
-                .collect()
-                .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-            else Nil
-          older.foreach { case (l, d, q) => mergeInto(l, d, q) }
-          stats.foreach { st =>
-            st.rebuilds.incrementAndGet()
-            st.stateRowsRead.addAndGet(baseRows.size + older.size)
-          }
+          replayState(s, outDir, "emb_drift_", batchId, stats)(mergeInto)
           initialized = true
         }
         moments.foreach { case (l, d, q) => mergeInto(l, d, q) }
@@ -919,18 +912,7 @@ object StreamingValidation {
           driftStatePath(outDir, "hh_"), partitionCol = "batch_id",
           recluster = false)
         if (!initialized) {
-          val (baseHw, baseRows) = readBase(s, outDir, "hh_")
-          baseRows.foreach { case (src, bin, n) => mergeCell(src, bin, n) }
-          val older =
-            if (pathExists(s, driftStatePath(outDir, "hh_")))
-              s.read.parquet(driftStatePath(outDir, "hh_"))
-                .filter(col("batch_id") > baseHw &&
-                  col("batch_id") < batchId)
-                .select("source", "bin", "count")
-                .collect()
-                .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-            else Nil
-          older.foreach { case (src, bin, n) => mergeCell(src, bin, n) }
+          replayState(s, outDir, "hh_", batchId, stats)(mergeCell)
           // candidates: the LATEST persisted top-k below this batch —
           // one generation, ≤ k rows per source
           if (pathExists(s, s"$outDir/hh_topk")) {
@@ -945,10 +927,6 @@ object StreamingValidation {
                 .foreach { case (src, rs) =>
                   topk.update(src, rs.map(_.getLong(1)).toSeq)
                 }
-          }
-          stats.foreach { st =>
-            st.rebuilds.incrementAndGet()
-            st.stateRowsRead.addAndGet(baseRows.size + older.size)
           }
           initialized = true
         }

@@ -213,4 +213,39 @@ class AppendDeltaSpec extends SparkSpec {
     assert(r2.deltaPartitions.isEmpty, r2.toString)
     assert(r2.rowsValidated > 0)
   }
+
+  test("a partition whose persisted sketch or stats state carries a stale " +
+      "snapshot id falls back to a full rescan") {
+    import graft.checkpoint.Checkpoint
+    val restamp: Seq[(String, String => Unit)] = Seq(
+      "state" -> { out =>
+        val (_, bytes) = Checkpoint.readStatsState(spark, out)("cardiac")
+        Checkpoint.writeStatsState(spark, out, Seq(("cardiac", "stale", bytes)))
+      },
+      "sketch" -> { out =>
+        val rule = graft.rules.Rules.standard.crossRunRules.head
+        val (_, sk) = Checkpoint.readSketches(spark, out, rule.id)("cardiac")
+        Checkpoint.writeSketches(spark, out,
+          Seq(("cardiac", "stale", rule.id, rule.key, sk)))
+      })
+    restamp.foreach { case (what, stale) =>
+      val dir = tmpDir(s"adelta_stale_$what")
+      writeInput(dir)
+      val cfg = ValidationJob.Config(
+        s"$dir/input", s"$dir/manifest", s"$dir/out", appendDelta = true)
+      ValidationJob.run(spark, cfg)
+      stale(s"$dir/out")
+
+      Seq(Sequence("D999999999960", Array(1, 2), 2, "cardiac"))
+        .toDS().write.mode("append").partitionBy("source")
+        .parquet(s"$dir/input")
+      val r2 = ValidationJob.run(spark, cfg)
+      assert(r2.validatedPartitions === Seq("cardiac"), s"$what: $r2")
+      assert(r2.deltaPartitions.isEmpty, s"$what: $r2")
+      // the whole partition was rescanned, old files included
+      val cardiacRows = spark.read.parquet(s"$dir/input")
+        .filter($"source" === "cardiac").count()
+      assert(r2.rowsValidated === cardiacRows, s"$what: $r2")
+    }
+  }
 }

@@ -185,4 +185,39 @@ class RuleDeltaSpec extends SparkSpec {
     assert(!vioSet(s"$dir/out").exists(_._2 == Rules.RConsistentNtok))
     assert(!verdictSet(s"$dir/out").exists(_._2 == Rules.RConsistentNtok))
   }
+
+  test("a prior ruleset with no persisted _rulesets map sends the whole " +
+      "run to full evaluation, even when other partitions have one") {
+    val dir = tmpDir("rdelta_nomap")
+    Drift.histograms(
+        SequenceGen.sequences(spark, N).toDF(), SequenceGen.vocabSize, "base")
+      .write.mode("overwrite").parquet(s"$dir/baseline")
+    writeInput(dir, Knobs(badNtokRate = 0.04))
+    val out = s"$dir/out"
+    val r1 = ValidationJob.run(spark, cfg(dir, "out", Rules.standard))
+    val parts = r1.validatedPartitions.sorted
+    assert(parts.size > 1)
+
+    // one partition moves to a second rule set (its map is persisted) ...
+    val withCap = RuleSet(Rules.standard.rules :+ capRule)
+    ValidationJob.run(spark, cfg(dir, "out", withCap)
+      .copy(partitions = Some(Seq(parts.head))))
+    // ... while the first run's map is lost, as after a run by code that
+    // predates the per-rule maps
+    graft.sources.TableIO.deletePartitions(spark,
+      graft.checkpoint.Checkpoint.rulesetsPath(out), "ruleset",
+      Seq(r1.rulesetHash))
+
+    val capRule2 = RowRule(
+      "R_NTOK_CAP2", Severity.Warning,
+      valid = col("n_tok") <= 30,
+      observed = to_json(struct(col("n_tok"))))
+    val extended = RuleSet(withCap.rules :+ capRule2)
+    val r3 = ValidationJob.run(spark,
+      cfg(dir, "out", extended, ruleDelta = true))
+    assert(r3.validatedPartitions.sorted === parts)
+    assert(r3.ruleDeltaPartitions.isEmpty, r3.toString)
+    assert(r3.rulesEvaluated === extended.ruleIds.sorted)
+    assert(vioSet(out).exists(_._2 == "R_NTOK_CAP2"))
+  }
 }
